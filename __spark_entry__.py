@@ -2996,10 +2996,6 @@ FROM scored WHERE sim >= 0.9"""
 # streaming family (Structured Streaming; availableNow over the same parquet)
 # ---------------------------------------------------------------------------
 
-from contextlib import contextmanager
-
-
-@contextmanager
 def _state_partitions(spark: SparkSession, n: int):
     """Scope ``spark.sql.shuffle.partitions`` down for a streaming query.
 
@@ -3021,12 +3017,9 @@ def _state_partitions(spark: SparkSession, n: int):
     digests, stream-stream join buffers) keep 8 locally and scale this
     knob with key cardinality in production.
     """
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    from mvrepair.tuning import scoped_conf
+
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 def q_events_hourly_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of events_hourly: readStream → watermark → window agg.
@@ -8405,18 +8398,14 @@ def q_part_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node").alias("part_id"),
         F.col("n_triangles").cast("long").alias("score"),
     )
-    fused = rrf_fuse(
-        [("pagerank", pr), ("triangles", tri)], id_col="part_id", k=100
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        fused.count()  # materialize while the oriented checkpoint is hot
-        from mvrepair import cache as _cache
+    from mvrepair import cache as _cache
 
-        _cache.adopt(fused)
-    except Exception:
-        fused.unpersist()
-        raise
-    return fused
+    # materialize while the oriented checkpoint is hot
+    return _cache.materialize(
+        rrf_fuse(
+            [("pagerank", pr), ("triangles", tri)], id_col="part_id", k=100
+        )
+    )
 
 
 def _oracle_part_rank_fusion() -> str:

@@ -27,8 +27,10 @@ session profiling many frames accumulates MEMORY_AND_DISK cache
 without bound.
 
 Now every frame that must stay persisted past its operator's return is
-REGISTERED here via :func:`adopt` (already persisted) or :func:`own`
-(persist + register).  Harnesses — bench.py, tools/check_oracle.py,
+REGISTERED here: eager caller-owned results go through
+:func:`materialize` (persist + count + register, unpersisted again if
+the count raises), lazy support frames through :func:`own` (persist +
+register).  Harnesses — bench.py, tools/check_oracle.py,
 the cache-lifecycle test — call :func:`release_all` after each query
 materializes.  Scoped persists (persist → use → unpersist inside one
 call) never register; ``localCheckpoint`` artifacts never register
@@ -61,15 +63,19 @@ def own(
     return out
 
 
-def adopt(df: "DataFrame") -> "DataFrame":
-    """Register an ALREADY-persisted frame for :func:`release_all`.
-
-    Use when the persist call needs operator-local error handling
-    (the eager ``persist → count → unpersist-on-error`` shape):
-    adopt only after the materializing count succeeds.
-    """
-    _OWNED.append(df)
-    return df
+def materialize(df: "DataFrame") -> "DataFrame":
+    """Persist ``df``, fill the cache with one ``count``, and register it
+    for :func:`release_all`.  If the count raises, the frame is
+    unpersisted before the error propagates — a failed eager operator
+    leaves no pin behind."""
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        out.count()
+    except Exception:
+        out.unpersist()
+        raise
+    _OWNED.append(out)
+    return out
 
 
 def owned_count() -> int:

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from mvrepair.functions import stable_hash64
+from mvrepair.tuning import sized_loop
 
 
 def fuzzy_pairs(
@@ -327,8 +328,6 @@ def pagerank_micro(
     the identical integers.  Default (``None``) keeps the r11 plan:
     degree aggregated here, riding the ranks frame.
     """
-    from mvrepair.tuning import sized_loop
-
     base = ((damp_den - damp_num) * 1_000_000) // damp_den
     spark = edges.sparkSession
     deg_on_ranks = deg_col is None
@@ -414,7 +413,7 @@ def triangle_counts(
     protocol — VERDICT r11 item #2):
 
     * the oriented frame is ``localCheckpoint``-ed AFTER a
-      ``repartition(N, "src")`` under ``tuning.static_shuffle`` — a
+      ``repartition(N, "src")`` under ``tuning.sized_loop`` — a
       checkpoint's LogicalRDD KEEPS its hashpartitioning in the static
       plan (the pagerank_micro evidence), so the wedge self-join's two
       sides need no Exchange at all (the r11 persist variant
@@ -492,15 +491,12 @@ def _checkpoint_oriented(
 ) -> DataFrame:
     """Materialize the oriented frame hash-partitioned by the wedge key:
     ``repartition(N, "src")`` + eager ``localCheckpoint`` under
-    ``static_shuffle`` so the checkpointed LogicalRDD advertises
+    ``sized_loop`` so the checkpointed LogicalRDD advertises
     ``hashpartitioning(src, N)`` to every consumer — the wedge
     self-join then plans with ZERO exchanges on its inputs.  N derives
     from the measured edge count (``loop_partitions`` — scale-adaptive,
     floored at 1, growing linearly with |E|)."""
-    from mvrepair.tuning import loop_partitions, static_shuffle
-
-    npart = loop_partitions(spark, n_edges)
-    with static_shuffle(spark, npart):
+    with sized_loop(spark, n_edges) as npart:
         return oriented.repartition(npart, "src").localCheckpoint(eager=True)
 
 
@@ -686,8 +682,6 @@ def label_communities(
     asc) head IS the struct-ordering minimum, bit-identically); the
     loop runs under ``tuning.sized_loop``.
     """
-    from mvrepair.tuning import sized_loop
-
     spark = edges.sparkSession
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))

@@ -23,6 +23,9 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from mvrepair import cache as _cache
+from mvrepair.tuning import AQE_UNDER_CACHE, scoped_conf
+
 QUANT = 1_000_000  # micro-unit quantization: |x|<=9e3 keeps dot < 2^63
 
 
@@ -287,17 +290,9 @@ def cosine_neardup_pairs(
         )
     )
     if owned is not None:
-        from pyspark import StorageLevel
-
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            out.count()  # materialize while the bucketed frame is hot
-            from mvrepair import cache as _cache
-
-            _cache.adopt(out)
-        except Exception:
-            out.unpersist()
-            raise
+            # materialize while the bucketed frame is hot
+            out = _cache.materialize(out)
         finally:
             owned.unpersist()
     return out
@@ -785,64 +780,47 @@ def semantic_dedup(
     # rule (b) from PERF.md: eagerly materialize the (small) result while
     # this cache is hot, release the corpus-sized intermediate before
     # returning, and hand the caller the result's own cache handle.
-    spark = df.sparkSession
-    _AQE_CACHE_KEY = (
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    )
-    old = spark.conf.get(_AQE_CACHE_KEY, None)
-    spark.conf.set(_AQE_CACHE_KEY, "true")
-    assigned = prepared.select(
-        F.col(id_col),
-        F.col("__qv"),
-        F.col("__norm"),
-        _best_cluster("t", cent_lits).cast("int").alias("cluster"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        a, b = assigned.alias("a"), assigned.alias("b")
-        prior_max = (
-            a.join(
-                b,
-                (F.col("a.cluster") == F.col("b.cluster"))
-                & (F.col(f"b.{id_col}") < F.col(f"a.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias(id_col),
-                F.floor(_pair_sim("a", "b") * 1_000_000)
-                .cast("long")
-                .alias("__m"),
-            )
-            .groupBy(id_col)
-            .agg(F.max("__m").alias("max_prior_cosine_micro"))
-        )
-        out = (
-            assigned.select(id_col, "cluster")
-            .join(prior_max, id_col, "left")
-            .select(
-                id_col,
-                "cluster",
-                "max_prior_cosine_micro",
-                F.coalesce(
-                    F.col("max_prior_cosine_micro") >= F.lit(threshold_micro),
-                    F.lit(False),
-                ).alias("is_semdup"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
+    with scoped_conf(df.sparkSession, AQE_UNDER_CACHE):
+        assigned = prepared.select(
+            F.col(id_col),
+            F.col("__qv"),
+            F.col("__norm"),
+            _best_cluster("t", cent_lits).cast("int").alias("cluster"),
+        ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            out.count()  # materialize while the assignment cache is hot
-            from mvrepair import cache as _cache
-
-            _cache.adopt(out)
-        except Exception:
-            out.unpersist()
-            raise
-    finally:
-        assigned.unpersist()
-        if old is None:
-            spark.conf.unset(_AQE_CACHE_KEY)
-        else:
-            spark.conf.set(_AQE_CACHE_KEY, old)
-    return out
+            a, b = assigned.alias("a"), assigned.alias("b")
+            prior_max = (
+                a.join(
+                    b,
+                    (F.col("a.cluster") == F.col("b.cluster"))
+                    & (F.col(f"b.{id_col}") < F.col(f"a.{id_col}")),
+                )
+                .select(
+                    F.col(f"a.{id_col}").alias(id_col),
+                    F.floor(_pair_sim("a", "b") * 1_000_000)
+                    .cast("long")
+                    .alias("__m"),
+                )
+                .groupBy(id_col)
+                .agg(F.max("__m").alias("max_prior_cosine_micro"))
+            )
+            out = (
+                assigned.select(id_col, "cluster")
+                .join(prior_max, id_col, "left")
+                .select(
+                    id_col,
+                    "cluster",
+                    "max_prior_cosine_micro",
+                    F.coalesce(
+                        F.col("max_prior_cosine_micro") >= F.lit(threshold_micro),
+                        F.lit(False),
+                    ).alias("is_semdup"),
+                )
+            )
+            # materialize while the assignment cache is hot
+            return _cache.materialize(out)
+        finally:
+            assigned.unpersist()
 
 
 def label_centroids(
@@ -1289,17 +1267,9 @@ def cosine_neardup_pairs_banded(
         )
     )
     if owned is not None:
-        from pyspark import StorageLevel
-
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            out.count()  # materialize while the prepared base is hot
-            from mvrepair import cache as _cache
-
-            _cache.adopt(out)
-        except Exception:
-            out.unpersist()
-            raise
+            # materialize while the prepared base is hot
+            out = _cache.materialize(out)
         finally:
             owned.unpersist()
     return out

@@ -18,6 +18,11 @@ with static planning — each round compiles to ONE job.  This is
 scale-adaptive, not a local-mode constant: partitions grow linearly
 with the measured row count (a 100 TB edge frame gets thousands of
 partitions, exactly as AQE would give it).
+
+:func:`scoped_conf` is the one way an operator changes a session conf
+at runtime: the loop sizing above, the AQE-off greedy selection loops,
+the AQE-under-cache scope of the eager dedup operators and the entry's
+streaming state-partition count all go through it.
 """
 
 from __future__ import annotations
@@ -30,8 +35,19 @@ from contextlib import contextmanager
 # graph rounds are join/agg CPU-bound, not byte-bound).
 ROWS_PER_PARTITION = 100_000
 
+# The confs operators scope at runtime (through :func:`scoped_conf`).
+# Static planning for fixed-round loops and greedy selection rounds:
+AQE_OFF = {"spark.sql.adaptive.enabled": "false"}
+# Cached plans compile with AQE restricted unless this conf is on (Spark
+# keeps a cached plan's output partitioning stable by default).  The eager
+# operators that persist a corpus-sized intermediate run under it so their
+# one heavy action keeps AQE.
+AQE_UNDER_CACHE = {
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true"
+}
 
-def loop_partitions(spark, n_rows: int) -> int:
+
+def loop_partitions(n_rows: int) -> int:
     """Shuffle-partition count for a fixed-round loop over ``n_rows``
     working rows: ceil(n_rows / ROWS_PER_PARTITION), at least 1 — small
     inputs don't pay 32-task dispatch for kilobyte stages, and big
@@ -41,50 +57,37 @@ def loop_partitions(spark, n_rows: int) -> int:
     parallelism clamp was dead code, and by_size alone is the behavior
     every r11 measurement was taken under, so it is now the stated
     contract.)"""
-    _ = spark  # kept in the signature: callers pass it, future floors may need it
     return max(1, -(-int(n_rows) // ROWS_PER_PARTITION))
+
+
+@contextmanager
+def scoped_conf(spark, confs: dict[str, str]):
+    """Set the session confs in ``confs`` for the enclosed block.  On
+    exit — normal or raised — each key gets its prior value back, or is
+    unset again if it was unset before, so an operator that fails
+    mid-way never leaks its tuning into the shared session."""
+    prior = {key: spark.conf.get(key, None) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        yield
+    finally:
+        for key, old in prior.items():
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
 
 
 @contextmanager
 def sized_loop(spark, n_rows: int):
     """Run a fixed-round loop body with AQE off and shuffle partitions
-    derived from the measured working-set size; restores both confs on
-    exit.  Only loop-internal actions (the per-round checkpoints /
+    derived from the measured working-set size; yields that partition
+    count.  Only loop-internal actions (the per-round checkpoints /
     collects) plan under this context — frames RETURNED to the caller
     are planned at action time, outside it."""
-    with static_shuffle(spark, loop_partitions(spark, n_rows)):
-        yield
-
-
-@contextmanager
-def aqe_off(spark):
-    """AQE off for the enclosed actions, shuffle partitions untouched;
-    restores on exit.  For EXCHANGE-FREE iterative loops (the greedy
-    selection loops: per-round TakeOrdered over a persisted frame +
-    a map-side update): under AQE even an exchange-free action that
-    fills an InMemoryRelation pays a separate ResultQueryStage JOB for
-    the cache fill — measured r12: 2 jobs and 0.26-0.42 s per greedy
-    round with AQE, 1 job and 0.17-0.28 s without, identical picks.
-    There is nothing for AQE to size here (no exchange in the loop
-    body), so turning it off costs no coalescing/skew handling."""
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-
-
-@contextmanager
-def static_shuffle(spark, n_partitions: int):
-    """AQE off + a fixed shuffle-partition count for the enclosed
-    actions; restores both confs on exit."""
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(int(n_partitions)))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_sp)
+    npart = loop_partitions(n_rows)
+    with scoped_conf(
+        spark, {**AQE_OFF, "spark.sql.shuffle.partitions": str(npart)}
+    ):
+        yield npart

@@ -1,7 +1,7 @@
 """Round-11 verdict item #2: ONE cache-ownership lifecycle.
 
 Every persisted frame that outlives its operator call must be
-registered with ``mvrepair.cache`` (own/adopt), and the harness-side
+registered with ``mvrepair.cache`` (own/materialize), and the harness-side
 ``release_all()`` must actually free it — so no registered query can
 leave an unreachable MEMORY_AND_DISK frame behind.  The round-10
 verdict traced three coexisting ownership conventions (caller-owns,
@@ -48,14 +48,27 @@ def test_own_persists_and_release_all_unpersists(spark):
     assert _plain_ids(spark) == before
 
 
-def test_adopt_registers_already_persisted_frame(spark):
-    df = spark.range(50).persist()
-    df.count()
-    cache.adopt(df)
-    assert cache.owned_count() == 1
+def test_materialize_caches_and_registers_frame(spark):
+    before = cache.owned_count()
+    df = cache.materialize(spark.range(50))
+    assert df.is_cached and df.storageLevel.useMemory
+    assert cache.owned_count() == before + 1
     cache.release_all()
     assert not df.storageLevel.useMemory
     assert cache.owned_count() == 0
+
+
+def test_materialize_unpersists_when_the_count_fails(spark):
+    from pyspark.sql import functions as F
+
+    before_ids = _plain_ids(spark)
+    before = cache.owned_count()
+    bad = spark.range(5).select(F.raise_error(F.lit("boom")).alias("x"))
+    with pytest.raises(Exception, match="boom"):
+        cache.materialize(bad)
+    assert not bad.is_cached
+    assert cache.owned_count() == before
+    assert _plain_ids(spark) == before_ids
 
 
 def test_release_all_is_idempotent_and_safe_when_empty(spark):
@@ -71,7 +84,7 @@ def test_no_registered_query_leaves_unreleasable_persist(spark, sf_dir):
     materialize it, release the ownership registry — no plain
     (non-localCheckpoint) persisted RDD may survive.  A failure names
     the offending queries: the fix is registering the operator's
-    persist via mvrepair.cache.own/adopt, never widening an exemption.
+    persist via mvrepair.cache.own/materialize, never widening an exemption.
     """
     import __spark_entry__ as e
 

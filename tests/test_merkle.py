@@ -323,8 +323,8 @@ def test_choose_depth_sizing_rule():
 
 
 def test_choose_depth_lands_in_measured_band():
-    """Pins choose_depth against the round-11 depth sweep
-    (tools/merkle_depth_study.py at 30x sf0.1, PERF.md): the rule's
+    """Pins choose_depth against the round-11 depth sweep at 30x sf0.1
+    (PERF.md, "Merkle depth sensitivity"): the rule's
     pick must land inside the measured fastest wall-time band AND keep
     the tree clear of the degenerate escape at every swept divergence.
     Constants below are the sweep's measurements."""
